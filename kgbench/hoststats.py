@@ -52,6 +52,64 @@ def descendants(pid: int) -> list[int]:
     return out
 
 
+# JIT compiler threads of the JVM: their CPU is the JVM compiling Spark,
+# not the program's work, and how much of it falls into one operation
+# depends on how far compilation had got when the operation started
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _stat_fields(path: str) -> list[str]:
+    """Fields of a /proc stat file after the command name, or []."""
+    try:
+        with open(path) as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return []
+
+
+def _ticks(fields: list[str], last: int) -> int:
+    # fields after ')': state(0) ppid(1) ... utime(11) stime(12)
+    # cutime(13) cstime(14)
+    return sum(int(v) for v in fields[11:last]) if fields else 0
+
+
+def _jit_ticks(pid: int) -> int:
+    total = 0
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return 0
+    for tid in tids:
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                if not f.read().startswith(JIT_THREADS):
+                    continue
+        except OSError:
+            continue
+        total += _ticks(_stat_fields(f"/proc/{pid}/task/{tid}/stat"), 13)
+    return total
+
+
+def tree_cpu_s(pid: int | None) -> tuple[float, float]:
+    """(CPU seconds, JIT compiler CPU seconds) used so far by this process
+    and pid's process tree (this process alone for None); the first
+    excludes the second.
+
+    A worker that exits is counted in its parent's reaped-children time,
+    so the sum only moves by the CPU used in between two readings. Time
+    the host gives to other tenants (steal) is counted by no process. The
+    JVM must run a fixed set of compiler threads
+    (-XX:-UseDynamicNumberOfCompilerThreads): the CPU of one that exited
+    would move from the JIT sum into the total."""
+    own = os.times()
+    ticks = jit = 0
+    for p in descendants(pid) if pid is not None else []:
+        ticks += _ticks(_stat_fields(f"/proc/{p}/stat"), 15)
+        jit += _jit_ticks(p)
+    hz = os.sysconf("SC_CLK_TCK")
+    return own.user + own.system + (ticks - jit) / hz, jit / hz
+
+
 def _hwm_kb(pid: int) -> int:
     try:
         with open(f"/proc/{pid}/status") as f:

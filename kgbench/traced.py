@@ -180,8 +180,8 @@ def _in_unit(tracer: spans.Tracer, unit: str, fn, *args, **kwargs):
 
 
 def run_traced(wl, args, work, inp, run, state, stop_spark):
-    spark, pages_df, aliases_df, _setup_s = wl.setup(
-        work, os.cpu_count() or 1, inp)
+    spark, pages_df, aliases_df, _wall, _cpu = wl.setup(
+        work, wl.cores(), inp, run)
     tracer = spans.Tracer(spark)
     out = os.path.join(work, "out-traced")
     base_s = stream = None

@@ -1,16 +1,20 @@
 """The benchmark's workloads, phases and metrics.
 
-A run has four phases, all in one Spark session with a fixed config:
+A run has two phases, both in one Spark session with a fixed config:
 
-1. set-up    session start plus one untimed warm-up build over a slice of
-             the input (`setup_s`);
-2. build     timed `pipeline.build_knowledge_graph` runs, each into a fresh
-             output directory, until the run's seconds are spent
-             (`docs_per_s` from their median);
-3. resume    the workload's restart path (`resume_s`);
-4. query     read the committed graph back, RDFS-entail it and run the
-             workload's SPARQL GROUP BY aggregate, `query_reps` times
-             (`query_s` from their median).
+1. set-up    session start plus one untimed warm-up build and query over a
+             small slice of the input (`setup_s`);
+2. rounds    a fixed number of rounds (`measure`), each of
+             - build: `pipeline.build_knowledge_graph` into a fresh output
+               directory (`docs_per_cpu_s` from the median build);
+             - resume: the same build again over that output, which is now
+               fully committed (`resume_cpu_s`, median);
+             - query: read the committed graph back, RDFS-entail it and run
+               the workload's SPARQL GROUP BY aggregate,
+               `queries_per_round` times (`query_cpu_s`, median).
+
+Every operation is timed in wall seconds and in CPU seconds of the
+session's processes (`hoststats.tree_cpu_s`); the metrics use CPU seconds.
 
 Every operation's output is checked against `check.py`'s Spark-free
 expectation; a raise or a mismatch counts as a failed operation.
@@ -37,9 +41,9 @@ import check
 import gen
 import hoststats
 
-N_BUCKETS = 8
-SHUFFLE_PARTITIONS = 8
-INPUT_FILES = 8
+N_BUCKETS = 4
+SHUFFLE_PARTITIONS = 4
+INPUT_FILES = 4
 DRIVER_MEMORY = "4g"
 # The heap is committed and touched up front and the young generation is
 # fixed: G1 otherwise grows the heap and sizes the young generation from
@@ -47,6 +51,22 @@ DRIVER_MEMORY = "4g"
 # by up to 28% between identical runs. Peak memory then varies with what
 # lives outside the heap (metaspace, code cache, Arrow and Python workers).
 HEAP_OPTS = f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch -Xmn1g"
+# C1 only: with the full tiered JIT, the C2 compiler threads kept
+# recompiling Spark for many builds, at 1.5-2 cores, and how far they had got
+# by a given build differed from run to run. C1 reaches steady code within
+# the warm-up; the code cache must hold all of it. The compiler threads are
+# a fixed set so that their CPU can be told apart from the program's
+# (hoststats.tree_cpu_s).
+JIT_OPTS = ("-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=512m "
+            "-XX:-UseDynamicNumberOfCompilerThreads")
+
+
+def cores() -> int:
+    """Spark task slots: half the host's cores. The driver JVM's own
+    threads (planning, JIT, GC) and the Python driver need the other half;
+    with a slot per core they compete with the tasks, and a stage waits for
+    whichever task lands on a core another tenant has taken."""
+    return max(1, (os.cpu_count() or 1) // 2)
 
 DEF_NS = "http://pages.example.org/def/"
 CLASS_NS = "http://kb.example.org/class/"
@@ -98,7 +118,8 @@ class Inputs:
     expected_query: dict = field(default_factory=dict)
     expected_graph: tuple = (0, 0)  # (rows, hash) of committed triples
     docs: int = 0
-    query_reps: int = 1
+    queries_per_round: int = 1
+    round_s: float = 20.0           # nominal round length, 4-core host
 
 
 def _page_texts(pages: pa.Table) -> dict:
@@ -120,23 +141,27 @@ def _expect(inp: Inputs, answer) -> Inputs:
 
 
 def kg_batch_inputs(seed: int) -> Inputs:
-    n_docs, n_hubs = 6_000, 20
+    n_docs, n_hubs = 4_000, 20
     inp = Inputs(pages=gen.docs_pages(seed, n_docs, n_hubs),
                  warm_pages=gen.docs_pages(seed + 1, 100, n_hubs),
                  aliases=gen.docs_aliases(n_hubs), table=docs_table(),
-                 query=QUERY_TEXT_BY_LANG, docs=n_docs, query_reps=3)
+                 query=QUERY_TEXT_BY_LANG, docs=n_docs,
+                 queries_per_round=5)
     return _expect(inp, lambda g: check.count_text_by_lang(
         g, DEF_NS + "lang", DEF_NS + "text"))
 
 
 def kg_chain_inputs(seed: int) -> Inputs:
-    shape = dict(chain_len=256, n_classes=1024, tax_depth=32)
-    n_rows = 2_500
+    shape = dict(chain_len=64, n_classes=512, tax_depth=16)
+    n_rows = 1_500
     pages, aliases = gen.chain_inputs(seed, n_rows, **shape)
-    warm, _ = gen.chain_inputs(seed + 1, 200, **shape)
+    # short chains and a shallow taxonomy: the warm-up runs every code path
+    # of a build in a few fixpoint rounds
+    warm, _ = gen.chain_inputs(seed + 1, 200, chain_len=8, n_classes=64,
+                               tax_depth=4)
     inp = Inputs(pages=pages, warm_pages=warm, aliases=aliases,
                  table=chain_table(), query=QUERY_INSTANCES_BY_CLASS,
-                 docs=n_rows, query_reps=1)
+                 docs=n_rows, queries_per_round=2)
     return _expect(inp, check.count_by_class)
 
 
@@ -161,7 +186,7 @@ def start_session(work: str, cores: int):
              .config("spark.sql.warehouse.dir", os.path.join(work, "wh"))
              .config("spark.driver.extraJavaOptions",
                      f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp} "
-                     + HEAP_OPTS)
+                     + HEAP_OPTS + " " + JIT_OPTS)
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -216,11 +241,16 @@ class Run:
         self.attempted = 0
         self.failed = 0
         self.samples: dict[str, list[float]] = {}
+        # (program, JIT) CPU seconds so far; set with the session
+        self.cpu = lambda: (0.0, 0.0)
+        self.last_cpu = (0.0, 0.0)  # of the last operation
 
     def op(self, name: str, fn, *args, verify=None):
         """Run one operation; returns (seconds, result) or (None, None)
-        when it raised. `verify(result)` returns mismatch lines."""
+        when it raised, and leaves its CPU seconds in `last_cpu`.
+        `verify(result)` returns mismatch lines."""
         self.attempted += 1
+        c0 = self.cpu()
         t0 = time.perf_counter()
         try:
             result = fn(*args)
@@ -230,6 +260,7 @@ class Run:
                   file=sys.stderr)
             return None, None
         dt = time.perf_counter() - t0
+        self.last_cpu = tuple(b - a for a, b in zip(c0, self.cpu()))
         problems = verify(result) if verify else []
         if problems:
             self.failed += 1
@@ -239,6 +270,16 @@ class Run:
 
     def add(self, metric: str, value: float) -> None:
         self.samples.setdefault(metric, []).append(value)
+
+    def timed(self, metric: str, name: str, fn, *args, verify=None):
+        """op() that records its wall, CPU and JIT CPU seconds as
+        `metric`, `metric`_cpu and `metric`_jit samples."""
+        dt, result = self.op(name, fn, *args, verify=verify)
+        if dt is not None:
+            self.add(metric, dt)
+            self.add(metric + "_cpu", self.last_cpu[0])
+            self.add(metric + "_jit", self.last_cpu[1])
+        return result
 
 
 def verify_build(inp: Inputs, resumed: bool = False):
@@ -254,55 +295,55 @@ def verify_query(inp: Inputs):
     return lambda got: check.compare("query answer", inp.expected_query, got)
 
 
-def setup(work: str, cores: int, inp: Inputs):
-    """Session start plus the warm-up build; returns (spark, pages,
-    aliases, seconds)."""
+def setup(work: str, cores: int, inp: Inputs, run: Run):
+    """Session start plus the warm-up; returns (spark, pages, aliases,
+    wall seconds, (CPU, JIT CPU) seconds) and points `run.cpu` at the
+    session's processes.
+
+    The warm-up builds the warm-up slice and queries it, so every code path
+    the rounds time has run before them."""
     write_pages(inp.pages, os.path.join(work, "pages"), INPUT_FILES)
     write_pages(inp.warm_pages, os.path.join(work, "warm"), INPUT_FILES)
     pq.write_table(inp.aliases, os.path.join(work, "aliases.parquet"))
+    c0 = hoststats.tree_cpu_s(None)
     t0 = time.perf_counter()
     spark = start_session(work, cores)
+    from pyspark import SparkContext
+    jvm = SparkContext._gateway.proc.pid
+    run.cpu = lambda: hoststats.tree_cpu_s(jvm)
     aliases_df = spark.read.parquet(os.path.join(work, "aliases.parquet"))
     warm_df = read_pages(spark, os.path.join(work, "warm"))
     # the warm-up's output is not checked: its answer is not the timed one
-    build(spark, warm_df, inp.table, aliases_df, os.path.join(work, "w-out"))
+    warm_out = os.path.join(work, "warm-out")
+    build(spark, warm_df, inp.table, aliases_df, warm_out)
+    query(spark, os.path.join(warm_out, "triples"), inp.query)
     setup_s = time.perf_counter() - t0
+    setup_cpu = tuple(b - a for a, b in zip(c0, run.cpu()))
     return spark, read_pages(spark, os.path.join(work, "pages")), \
-        aliases_df, setup_s
+        aliases_df, setup_s, setup_cpu
 
 
-def timed_builds(spark, work, inp, pages_df, aliases_df, run: Run,
-                 seconds: float) -> str:
-    """Builds until `seconds` are spent (at least one); returns the last
-    output directory."""
-    t_end = time.perf_counter() + seconds
-    i = 0
-    while True:
+def measure(spark, work, inp, pages_df, aliases_df, run: Run,
+            rounds: int) -> str:
+    """`rounds` rounds of build, resume and queries; returns the last
+    build's output directory.
+
+    Each round builds into a fresh output directory, re-runs the build
+    over that now fully committed output, and queries it. Interleaving
+    spreads every metric's samples over the whole run, so a burst of host
+    load moves one sample of each rather than every sample of one."""
+    for i in range(rounds):
         out = os.path.join(work, f"out-{i}")
-        dt, _ = run.op(f"build {i}", build, spark, pages_df, inp.table,
-                       aliases_df, out, verify=verify_build(inp))
-        if dt is not None:
-            run.add("build_s", dt)
-        i += 1
-        if time.perf_counter() >= t_end:
-            return out
-
-
-def resume(spark, inp, pages_df, aliases_df, out: str, run: Run) -> None:
-    """Re-run the build over an output that is already fully committed."""
-    dt, _ = run.op("resume", build, spark, pages_df, inp.table, aliases_df,
-                   out, verify=verify_build(inp, resumed=True))
-    if dt is not None:
-        run.add("resume_s", dt)
-
-
-def queries(spark, inp, out: str, run: Run) -> None:
-    tdir = os.path.join(out, "triples")
-    for i in range(inp.query_reps):
-        dt, _ = run.op(f"query {i}", query, spark, tdir, inp.query,
-                       verify=verify_query(inp))
-        if dt is not None:
-            run.add("query_s", dt)
+        run.timed("build", f"build {i}", build, spark, pages_df, inp.table,
+                  aliases_df, out, verify=verify_build(inp))
+        run.timed("resume", f"resume {i}", build, spark, pages_df,
+                  inp.table, aliases_df, out,
+                  verify=verify_build(inp, resumed=True))
+        tdir = os.path.join(out, "triples")
+        for q in range(inp.queries_per_round):
+            run.timed("query", f"query {i}.{q}", query, spark, tdir,
+                      inp.query, verify=verify_query(inp))
+    return out
 
 
 def verify_graph(spark, inp, out: str, run: Run) -> None:
