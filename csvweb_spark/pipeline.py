@@ -72,8 +72,7 @@ def synth_aliases(docs: DataFrame) -> DataFrame:
 
 
 def kg_canonical_triples(pages: DataFrame, table: Table, aliases: DataFrame,
-                         mode: str = MODE_MINIMAL,
-                         cache_registry: Optional[list] = None):
+                         mode: str = MODE_MINIMAL):
     """Stages A-D as DataFrames (no materialization): returns
     (canonical_triples, entity_map, observation, cell_errors).
 
@@ -82,16 +81,15 @@ def kg_canonical_triples(pages: DataFrame, table: Table, aliases: DataFrame,
     ConversionResult.Errors channel (Rdf/Converter.cs:456-461) as a
     DataFrame the caller can materialize next to the graph tables.
 
-    The triples and sameAs-edge DataFrames are persisted
-    (MEMORY_AND_DISK): triples feed three consumers (linking, the
-    canonical rewrite, the final sink) and the edges feed the CC seed
-    checkpoint plus the canonical-URI derivation - without the persist
-    each consumer recomputes the whole extraction, ~3-5x the A+B cost
-    (measured 40 s -> ~20 s at sf0.1). At 100 TB a spilled persist of the
-    triples costs about one extra write of the stage output - far below
-    re-running extraction per consumer. Pass `cache_registry` (a list) to
-    receive the persisted handles for unpersisting once every consumer
-    has materialized (build_knowledge_graph does)."""
+    The triples and sameAs-edge DataFrames are lazily localCheckpoint-ed:
+    triples feed three consumers (linking, the canonical rewrite, the
+    final sink) and the edges feed the CC seed checkpoint plus the
+    canonical-URI derivation, so each is computed once, by the first
+    action that reaches it, and later consumers read the checkpointed
+    blocks instead of re-running the extraction (~3-5x the A+B cost
+    without it; measured 40 s -> ~20 s at sf0.1). The blocks live
+    outside the cache manager - `unpersist()` does not release them -
+    and are freed when the frames are garbage-collected."""
     from .operators.triples import convert_table_group_spark_with_errors
 
     # A+B: extraction + conversion (narrow)
@@ -132,8 +130,6 @@ def kg_canonical_triples(pages: DataFrame, table: Table, aliases: DataFrame,
     canonical_triples = canonicalize_triples(
         triples, entity_map.select("node", F.col("canonical_uri")
                                    .alias("canonical")))
-    if cache_registry is not None:
-        cache_registry.extend([triples, edges_uri])
     return canonical_triples, entity_map, obs, errors
 
 
@@ -191,8 +187,8 @@ def curate_documents(docs: DataFrame, text_col: str = "text",
     with_metrics=False runs ZERO jobs here; the same persists are set up
     lazily so the caller's first action executes each stage once. Pass
     `cache_registry` (a list) to receive every still-persisted handle
-    for unpersisting when done (same contract as kg_canonical_triples);
-    intermediates are always released here. Cache policy (review fix -
+    for unpersisting when done; intermediates are always released
+    here. Cache policy (review fix -
     plain calls must not leak): with neither metrics nor a registry,
     NOTHING is persisted (the pre-round-4 behavior); with metrics but no
     registry, only the returned result stays cached - call
@@ -300,9 +296,8 @@ def build_knowledge_graph(spark: SparkSession, pages: DataFrame, table: Table,
       output_dir/entities/  (node, component, canonical_uri)
       output_dir/_manifests under each table dir (commit records)
     """
-    caches: list = []
     canonical_triples, entity_map, obs, errors = kg_canonical_triples(
-        pages, table, aliases, mode=mode, cache_registry=caches)
+        pages, table, aliases, mode=mode)
 
     # E: materialize with lineage (graph tables + the cell-error table --
     # the data-quality channel, reference Rdf/Converter.cs:456-461)
@@ -315,10 +310,6 @@ def build_knowledge_graph(spark: SparkSession, pages: DataFrame, table: Table,
     err_manifest = write_resumable(
         errors, os.path.join(output_dir, "errors"),
         n_buckets=max(n_buckets // 4, 1))
-    # all sinks materialized: release the stage caches (long-running
-    # drivers would otherwise accumulate spilled blocks across jobs)
-    for cached in caches:
-        cached.unpersist()
     return {
         "triples": t_manifest,
         "entities": e_manifest,

@@ -53,10 +53,11 @@ class LocalFS:
         # NOTE divergent overwrite semantics (documented, round-3 ADVICE):
         # LocalFS is last-write-wins (os.replace overwrites - which the
         # turtle/ntriples prefix sidecars rely on when a sink is
-        # re-written), while HadoopFS is first-commit-wins (rename never
-        # overwrites; see below). Manifest commits are safe under EITHER
-        # because lineage run_ids are unique (timestamp + uuid suffix), so
-        # the same target name implies the same content.
+        # re-written), while HadoopFS is first-commit-wins on HDFS
+        # (rename does not overwrite there; see below). Manifest commits
+        # are safe under EITHER because lineage run_ids are unique
+        # (timestamp + uuid suffix), so the same target name implies the
+        # same content.
         with open(tmp, "w") as f:
             f.write(text)
         os.replace(tmp, p)
@@ -68,13 +69,33 @@ class LocalFS:
         creators exactly one wins and the rest keep the winner's
         content. Callers must read `p` back to learn who won. Unlike
         write_text_atomic (os.replace, last-write-wins), this is safe
-        for ownership stamps."""
+        for ownership stamps.
+
+        Mounts without hard links (some FUSE, object-store and NFS
+        setups) fail os.link with another OSError; there `p` is
+        created with O_CREAT|O_EXCL, which is just as exclusive but
+        writes the text after the create. A write that raises removes
+        `p` again; a process killed in between leaves it empty or
+        short, and a racing reader can see it so too - readers must
+        treat an unparseable `p` as an unfinished claim."""
         with open(tmp, "w") as f:
             f.write(text)
         try:
             os.link(tmp, p)
         except FileExistsError:
             pass
+        except OSError:
+            try:
+                fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                pass
+            else:
+                try:
+                    with os.fdopen(fd, "w") as f:
+                        f.write(text)
+                except BaseException:
+                    os.unlink(p)
+                    raise
         finally:
             os.unlink(tmp)
 
@@ -219,17 +240,30 @@ class HadoopFS:
         # re-writes them -> duplicated rows). Manifest names embed run_id,
         # so an existing target means the SAME run already committed:
         # keep the committed file (first-commit-wins is idempotent) and
-        # drop the temp - the target is never uncovered.
-        if self._fs.exists(self._p(p)):
-            self._fs.delete(self._p(tmp), False)
+        # drop the temp - the target is never uncovered. A rename that
+        # returns False lost a race to a concurrent creator the exists
+        # probe missed: same outcome, and its temp must not pile up.
+        if not self.exists(p) and self._fs.rename(self._p(tmp), self._p(p)):
             return
-        self._fs.rename(self._p(tmp), self._p(p))
+        self._fs.delete(self._p(tmp), False)
+        if not self.exists(p):
+            raise IOError(f"rename {tmp!r} -> {p!r} failed")
 
     def write_text_exclusive(self, p: str, text: str, tmp: str) -> None:
-        """First-commit-wins create (see LocalFS): HDFS rename never
-        overwrites, so the existing write_text_atomic semantics already
-        are first-commit-wins - delegate."""
-        self.write_text_atomic(p, text, tmp)
+        """First-commit-wins create (see LocalFS). HDFS renames
+        atomically and returns False onto an existing file, so
+        write_text_atomic already is first-commit-wins there. Hadoop's
+        local FS is not: RawLocalFileSystem's rename replaces the
+        target, and Hive's ProxyLocalFileSystem (the file:// FS when
+        Spark ships Hive) refuses it only by a check-then-rename. So
+        file:/// paths take LocalFS's create, which the OS makes
+        exclusive."""
+        local, local_tmp = (strip_scheme_authority(p),
+                            strip_scheme_authority(tmp))
+        if local is not None and local_tmp is not None:
+            LocalFS().write_text_exclusive(local, text, local_tmp)
+        else:
+            self.write_text_atomic(p, text, tmp)
 
     def parquet_source(self, p: str):
         import pyarrow as pa

@@ -1,21 +1,54 @@
 """Structured Streaming front-end for the CSVW pipeline.
 
 The reference 'streams' only in the single-threaded iterator sense
-(Rdf/Converter.cs:326); here the same conversion runs incrementally over an
-unbounded pages source:
+(Rdf/Converter.cs:326); here the same conversion and the state built on
+it run incrementally over unbounded file sources. `available_now=True`
+drains the backlog and stops - the batch-parity mode used by tests;
+pass False for continuous tailing.
 
-* `stream_triples` - readStream(pages dir) -> the SAME compiled conversion
-  plan as the batch path (narrow mapInPandas + JVM expressions work
-  unchanged under micro-batching) -> parquet sink with checkpoint.
-  `trigger(availableNow=True)` drains the backlog and stops - the batch-
-  parity mode used by tests; omit for continuous tailing.
-* `stream_page_stats` - watermarked sliding-window aggregation over
-  warc_ts (pages/sec per crawl window, late data tolerated up to the
-  watermark) - the standard late-data pattern for crawl-time metrics.
+Sink streams, where Spark or the caller owns the sink:
 
-Checkpointing gives exactly-once sink semantics per micro-batch; this is
-the Structured-Streaming complement to the snapshot/manifest resume model
-in plans/lineage.py.
+* `stream_triples` - the SAME compiled conversion plan as the batch path
+  (narrow mapInPandas + JVM expressions work unchanged under
+  micro-batching) into a checkpointed parquet sink, exactly-once per
+  micro-batch.
+* `stream_page_stats` (watermarked sliding windows over warc_ts) and
+  `stream_host_stats` (applyInPandasWithState) return the streaming
+  DataFrame.
+
+Batch-dir streams - every other `stream_*` - commit each micro-batch
+under `batch=<id>` directories. A matching `read_*` merges the committed
+dirs (ts-argmax, sum, max, set union or plain union) and a `compact_*`
+folds them into one snapshot (`_compact_state`). One protocol, stated
+here once, makes them crash-safe and resumable:
+
+* Own-dir overwrite. A micro-batch writes only its own `batch=<id>`
+  dirs, with mode('overwrite'), from inputs fixed for that id: its
+  files, plus state committed by other dir ids. The checkpoint never
+  re-delivers a completed batch and re-delivers a crashed one with the
+  same id and data, so a retry rewrites the same bytes. Readers skip
+  dirs without Spark's `_SUCCESS` marker (`_batch_dirs`), so a torn dir
+  stays invisible until the retry rewrites it.
+* Compaction offsets. A state dir id is batch id + the offset of the
+  newest `_epoch_<n>` marker (`_compact_offset`), so no post-restart
+  micro-batch can land on, exclude and overwrite a compaction snapshot.
+* Folded-replay skip. A batch that committed, crashed before the
+  checkpoint acknowledged it, and was then folded by a compaction is
+  replayed without committing (`_delta_dir` returns None): re-written at
+  the new offset, its delta would be counted twice.
+* `_owner` stamp. Batch ids are per checkpoint, so the first commit
+  stamps the checkpoint path into the state dir's `_owner` file and a
+  stream from any other checkpoint fails on its first batch
+  (`_claim_owner`).
+* Hook points. `batch_hook(batch_id, point)` is the crash-injection
+  seam (leave None in production): 'start' fires before any work, 'done'
+  after every batch that completes - empty and skipped ones included.
+  Some operators fire 'mid' between two of their commits (each says
+  where); `stream_corpus_sketches` fires 'cm_committed' or 'cm_skipped'.
+
+`_start` owns the micro-batch loop and the hooks, `_commit_delta` the
+skip plus the overwrite, and `_delta_stream` the whole body of the
+stateless operators, which write only their own per-batch delta.
 """
 
 from __future__ import annotations
@@ -28,15 +61,72 @@ from pyspark.sql import functions as F
 from ..csvw.convert import MODE_MINIMAL
 from ..csvw.model import Table
 from ..operators.triples import compile_triples, extract_rows
+from ..plans.fs import fs_for
 from ..sources.pages import PAGES_SCHEMA
+
+# ts-argmax reads elect over all time: snapshot_asof at +inf
+_END_OF_TIME = "9999-12-31 23:59:59"
+
+
+def _read_stream(spark: SparkSession, input_dir: str, schema,
+                 max_files: Optional[int], fmt: str = "parquet") -> DataFrame:
+    reader = spark.readStream.format(fmt).schema(schema)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.load(input_dir)
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str,
                       max_files_per_trigger: Optional[int] = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+    return _read_stream(spark, input_dir, PAGES_SCHEMA, max_files_per_trigger)
+
+
+def _start(stream: DataFrame, checkpoint_dir: str, available_now: bool,
+           batch_hook, process):
+    """Run `process(batch_df, batch_id, hook)` on every micro-batch and
+    start the query. 'start' fires before `process`, 'done' after it
+    returns; `hook` is never None, so bodies fire their intermediate
+    points unconditionally."""
+    hook = batch_hook or (lambda _batch_id, _point: None)
+
+    def run(batch_df, batch_id):
+        hook(batch_id, "start")
+        process(batch_df, batch_id, hook)
+        hook(batch_id, "done")
+
+    writer = (stream.writeStream.foreachBatch(run)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _commit_delta(fs, root: str, batch_id: int, delta: DataFrame) -> bool:
+    """Overwrite the batch's own dir under `root` with `delta`; False
+    (nothing written) on a folded replay."""
+    dest = _delta_dir(fs, root, batch_id)
+    if dest is None:
+        return False
+    delta.write.mode("overwrite").parquet(dest[1])
+    return True
+
+
+def _delta_stream(spark: SparkSession, stream: DataFrame, output_dir: str,
+                  subdir: str, checkpoint_dir: str, available_now: bool,
+                  batch_hook, delta_fn):
+    """A stateless batch-dir operator: each micro-batch commits only
+    `delta_fn(batch_df)` under output_dir/subdir - no committed-state
+    read, no join. An empty delta commits nothing."""
+    fs = fs_for(output_dir, spark)
+    root = fs.join(output_dir, subdir)
+
+    def process(batch_df, batch_id, _hook):
+        _claim_owner(fs, root, checkpoint_dir)
+        delta = delta_fn(batch_df)
+        if delta.take(1):
+            _commit_delta(fs, root, batch_id, delta)
+
+    return _start(stream, checkpoint_dir, available_now, batch_hook, process)
 
 
 def stream_triples(spark: SparkSession, input_dir: str, output_dir: str,
@@ -67,14 +157,11 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
                            shapes: Optional[list] = None,
                            quarantine_on_violation: bool = False):
     """The FULL KG pipeline (extract -> convert -> link -> CC ->
-    materialize-with-lineage) under incremental arrival: a foreachBatch
-    composition running pipeline.kg_canonical_triples + write_resumable
-    per micro-batch.
+    materialize-with-lineage) under incremental arrival: every
+    micro-batch runs pipeline.kg_canonical_triples + write_resumable.
 
     Exactly-once layering (the point of this composition):
-    * BATCH level - the streaming checkpoint: a batch whose foreachBatch
-      completed is never re-delivered; a crashed batch is re-delivered
-      with the SAME batch_id and data (file source).
+    * BATCH level - the streaming checkpoint (module docstring).
     * PARTITION level, within a re-delivered batch - the lineage commit
       protocol: outputs land under output_dir/batch=<id>/{triples,
       entities,errors}, so a retry's write_resumable skips the buckets
@@ -84,10 +171,7 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
       micro-batches, so committing them in one shared table would make
       later batches invisible.)
 
-    `batch_hook(batch_id, point)` is called at point='start' (before any
-    write) and point='mid' (between the triples commit and the entities
-    commit) - the crash-injection seam used by the resume test; leave
-    None in production. Returns the StreamingQuery.
+    'mid' fires between the triples commit and the entities commit.
 
     `shapes` (round 5): SHACL publish gate - every micro-batch's
     canonical triples are validated (operators/shacl.py) and the
@@ -96,20 +180,16 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
     commits ONLY its report (triples/entities withheld for curation) -
     validation is deterministic over the batch, so a crash-replayed
     batch reaches the same verdict and the resume protocol is
-    unaffected."""
+    unaffected. Returns the StreamingQuery."""
     from ..pipeline import kg_canonical_triples
-    from ..plans.fs import fs_for
     from ..plans.lineage import write_resumable
 
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
     fs = fs_for(output_dir, spark)
+    small = max(n_buckets // 4, 1)
 
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        caches: list = []
+    def process(batch_df, batch_id, hook):
         canonical, entity_map, _obs, errors = kg_canonical_triples(
-            batch_df, table, aliases, mode=mode, cache_registry=caches)
+            batch_df, table, aliases, mode=mode)
         bdir = fs.join(output_dir, f"batch={batch_id}")
         if shapes is not None:
             from ..operators.shacl import validate_shapes
@@ -118,29 +198,18 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
                 .localCheckpoint(eager=True)
             n_viol = report.count()
             write_resumable(report.withColumn("url", F.col("focus")),
-                            fs.join(bdir, "violations"),
-                            n_buckets=max(n_buckets // 4, 1))
+                            fs.join(bdir, "violations"), n_buckets=small)
             if quarantine_on_violation and n_viol > 0:
-                for cached in caches:
-                    cached.unpersist()
                 return
         write_resumable(canonical, fs.join(bdir, "triples"),
                         n_buckets=n_buckets)
-        if batch_hook is not None:
-            batch_hook(batch_id, "mid")
+        hook(batch_id, "mid")
         write_resumable(entity_map.withColumn("url", F.col("uri")),
-                        fs.join(bdir, "entities"),
-                        n_buckets=max(n_buckets // 4, 1))
-        write_resumable(errors, fs.join(bdir, "errors"),
-                        n_buckets=max(n_buckets // 4, 1))
-        for cached in caches:
-            cached.unpersist()
+                        fs.join(bdir, "entities"), n_buckets=small)
+        write_resumable(errors, fs.join(bdir, "errors"), n_buckets=small)
 
-    writer = (pages.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(read_pages_stream(spark, input_dir, max_files_per_trigger),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 def stream_deduped_documents(spark: SparkSession, input_dir: str,
@@ -161,7 +230,7 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
     committed corpus represented by a persistent BAND-BUCKET + SIGNATURE
     state table instead of the corpus text:
 
-      per batch (foreachBatch):
+      per batch:
       1. in-batch near-dedup: band-bucket candidate pairs among the
          batch's docs, verified by minhash-signature agreement
          (sig_agreement_at_least: >= ceil(threshold * num_hashes) equal
@@ -175,51 +244,22 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
          retained or re-read, which is what makes the state viable at
          10^12 docs;
       3. survivors land in docs/batch=<id>/, their bands + signatures in
-         _state/{bands,sigs}/batch=<dir id>/ - dir id = batch id + the
-         per-family compaction offset (_compact_offset), so
-         `compact_dedup_state` can fold the monotonically-growing dirs
-         into one snapshot without colliding with a post-restart
-         micro-batch (round-4 VERDICT item #5; same protocol as the CC
-         label state).
+         _state/{bands,sigs}/batch=<dir id>/, which
+         `compact_dedup_state` folds (round-4 VERDICT item #5).
 
-    Exactly-once on redelivery: every write is a deterministic
-    mode('overwrite') of THIS batch's own directory, and the state read
-    excludes the current batch id - so a crashed attempt's partial output
-    is simply rewritten byte-identically (batch content and prior state
-    are fixed), never double-counted and never self-matched. The
-    streaming checkpoint guarantees completed batches are not
-    re-delivered.
-
-    `batch_hook(batch_id, point)` fires at 'start' and at 'mid' (between
-    the docs commit and the state commit) - the crash-injection seam for
-    the resume test. Returns the StreamingQuery."""
+    The state read excludes the batch's own dir ids, so a retry is
+    never self-matched (batch-dir protocol, module docstring). 'mid'
+    fires between the docs commit and the state commit. Returns the
+    StreamingQuery."""
     import math
 
     from ..operators.dedup import (lsh_band_buckets, minhash_signatures,
                                    sig_agreement_at_least)
-    from ..plans.fs import fs_for
 
     min_equal = int(math.ceil(threshold * num_hashes))
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
     fs = fs_for(output_dir, spark)
-
-    def _dir_id(sub: str, batch_id: int) -> int:
-        # dir id = batch id + per-family compaction offset (see
-        # _compact_offset: keeps consolidated snapshots out of the
-        # stream's id space). Offsets are per sub-root: a crash between
-        # compact_dedup_state's two folds leaves them unequal, which is
-        # fine - each family's reads/writes only use its own offset.
-        return batch_id + _compact_offset(
-            fs, fs.join(output_dir, "_state", sub))
-
-    def _state_dirs(sub: str, dir_id: int) -> list[str]:
-        # committed (_SUCCESS-marked) dirs only, own dir id excluded -
-        # the retry-safety invariant _batch_dirs documents
-        root = fs.join(output_dir, "_state", sub)
-        return [p for b, p in _batch_dirs(fs, root) if b != dir_id]
+    band_root = fs.join(output_dir, DEDUP_BANDS_SUBDIR)
+    sig_root = fs.join(output_dir, DEDUP_SIGS_SUBDIR)
 
     def _capped(bandt):
         """Drop band entries in over-cap buckets (the dedup_minhash_lsh
@@ -234,9 +274,7 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
                   .select("band", "bucket")
         return bandt.join(ok, ["band", "bucket"])
 
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
+    def process(batch_df, batch_id, hook):
         caches = []
 
         def _cached(df):
@@ -251,13 +289,11 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
             docs = _cached(batch_df.select(key_col, text_col))
             if docs.count() == 0:
                 return
-            for _sub in ("bands", "sigs"):
-                _claim_owner(fs, fs.join(output_dir, "_state", _sub),
-                             checkpoint_dir)
-            if (_folded_in_snapshot(
-                    fs, fs.join(output_dir, "_state", "bands"), batch_id)
-                or _folded_in_snapshot(
-                    fs, fs.join(output_dir, "_state", "sigs"), batch_id)):
+            _claim_owner(fs, band_root, checkpoint_dir)
+            _claim_owner(fs, sig_root, checkpoint_dir)
+            band_dest = _delta_dir(fs, band_root, batch_id)
+            sig_dest = _delta_dir(fs, sig_root, batch_id)
+            if band_dest is None or sig_dest is None:
                 # folded replay: this batch's state is already inside a
                 # compaction snapshot (docs committed first, so the
                 # docs dir exists too). Recomputing would dedup the
@@ -298,16 +334,16 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
             # table, verified against the committed signatures; both
             # sides' over-cap buckets are excluded from candidate
             # generation (boilerplate belongs to the exact pre-pass)
-            band_id = _dir_id("bands", batch_id)
-            sig_id = _dir_id("sigs", batch_id)
-            band_dirs = _state_dirs("bands", band_id)
-            if band_dirs:
-                prev_bands = _capped(spark.read.parquet(*band_dirs))
-                prev_sigs = spark.read.parquet(
-                    *_state_dirs("sigs", sig_id))
+            prev_bands = _read_union_state(spark, output_dir,
+                                           DEDUP_BANDS_SUBDIR,
+                                           exclude=band_dest[0])
+            prev_sigs = _read_union_state(spark, output_dir,
+                                          DEDUP_SIGS_SUBDIR,
+                                          exclude=sig_dest[0])
+            if prev_bands is not None and prev_sigs is not None:
                 cand = (joinable
                         .join(alive.select(key_col), key_col, "left_semi")
-                        .join(prev_bands.select(
+                        .join(_capped(prev_bands).select(
                             F.col(key_col).alias("_old"), "band", "bucket"),
                             ["band", "bucket"])
                         .select(key_col, "_old").distinct())
@@ -327,39 +363,26 @@ def stream_deduped_documents(spark: SparkSession, input_dir: str,
             # two -> redelivery rewrites both deterministically)
             alive.write.mode("overwrite").parquet(
                 fs.join(output_dir, f"docs/batch={batch_id}"))
-            if batch_hook is not None:
-                batch_hook(batch_id, "mid")
+            hook(batch_id, "mid")
             keys = alive.select(key_col)
             bandt.join(keys, key_col, "left_semi").write.mode("overwrite") \
-                .parquet(fs.join(output_dir,
-                                 f"_state/bands/batch={band_id}"))
+                .parquet(band_dest[1])
             sigs.join(keys, key_col, "left_semi").write.mode("overwrite") \
-                .parquet(fs.join(output_dir,
-                                 f"_state/sigs/batch={sig_id}"))
+                .parquet(sig_dest[1])
         finally:
             for c in caches:
                 c.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_read_stream(spark, input_dir, schema,
+                               max_files_per_trigger),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 def read_streamed_documents(spark: SparkSession,
                             output_dir: str) -> Optional[DataFrame]:
     """Union of every committed batch's surviving documents (None when
-    nothing is committed yet). Torn dirs from a crashed batch (no
-    _SUCCESS marker) are invisible until the stream's retry rewrites
-    them - same contract as read_entity_components."""
-    from ..plans.fs import fs_for
-
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in _batch_dirs(fs, fs.join(output_dir, "docs"))]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    nothing is committed yet); torn dirs stay invisible."""
+    return _read_union_state(spark, output_dir, "docs")
 
 
 def read_streamed_graph(spark: SparkSession, output_dir: str,
@@ -368,7 +391,6 @@ def read_streamed_graph(spark: SparkSession, output_dir: str,
     by stream_knowledge_graph (None when nothing is committed yet).
     Uncommitted partitions of a crashed batch stay invisible, exactly as
     in the batch read path."""
-    from ..plans.fs import fs_for
     from ..plans.lineage import read_snapshot, snapshots
 
     fs = fs_for(output_dir, spark)
@@ -557,31 +579,21 @@ def _compact_offset(fs, root: str) -> int:
     return max(offs, default=0)
 
 
-def _folded_in_snapshot(fs, root: str, batch_id: int) -> bool:
-    """True when this micro-batch's delta is ALREADY inside a
-    compaction snapshot: the batch committed its dir, crashed before
-    the checkpoint acknowledged it, and compaction ran before the
-    restart - the replay must then SKIP its commit, because for
-    additive (sum-merged) families a re-written delta at the
-    post-compaction offset is a NEW dir and its mass would be counted
-    twice (review fix; latest-wins/union families were merely
+def _delta_dir(fs, root: str, batch_id: int):
+    """(dir id, path) of a micro-batch's state-delta dir under `root`,
+    or None when the delta is ALREADY inside a compaction snapshot and
+    the commit must be skipped: the batch committed its dir, crashed
+    before the checkpoint acknowledged it, and compaction ran before
+    the restart. For additive (sum-merged) families a re-written delta
+    at the post-compaction offset is a NEW dir whose mass would be
+    counted twice (review fix; latest-wins/union families were merely
     redundant). Checked against EVERY epoch marker: the batch's
     write-time offset equals the prev_offset of the first compaction
     after the write, so batch_id + prev_offset <= folded_max
     identifies it even across chained compactions; a LIVE batch id B'
     can never match (every marker's folded_max <= max-dir-id at its
     compaction < B' + its prev_offset). Markers from before this
-    protocol version lack the fields and never match."""
-    return any(
-        "prev_offset" in m and "folded_max" in m
-        and batch_id + m["prev_offset"] <= m["folded_max"]
-        for m in _epoch_markers(fs, root))
-
-
-def _delta_dir(fs, root: str, batch_id: int):
-    """Destination dir for a micro-batch's state-delta commit, or None
-    when the delta is already folded into a compaction snapshot and
-    the commit must be skipped (see _folded_in_snapshot). One marker
+    protocol version lack the fields and never match. One marker
     listing serves both the skip test and the offset (review fix: two
     separate scans doubled object-store round trips per batch)."""
     markers = _epoch_markers(fs, root)
@@ -589,8 +601,8 @@ def _delta_dir(fs, root: str, batch_id: int):
            and batch_id + m["prev_offset"] <= m["folded_max"]
            for m in markers):
         return None
-    off = max((m["offset"] for m in markers), default=0)
-    return fs.join(root, f"batch={batch_id + off}")
+    dir_id = batch_id + max((m["offset"] for m in markers), default=0)
+    return dir_id, fs.join(root, f"batch={dir_id}")
 
 
 def _claim_owner(fs, root: str, checkpoint_dir: str) -> None:
@@ -608,7 +620,9 @@ def _claim_owner(fs, root: str, checkpoint_dir: str) -> None:
     both claim it). write_text_exclusive guarantees exactly one
     concurrent creator wins; every claimant reads the marker BACK and
     must match it, so a losing racer fails loudly on its first
-    batch."""
+    batch. A marker that does not parse is a claim that died between
+    the create and the write (see LocalFS.write_text_exclusive) or is
+    still being written: that fails too, naming the file."""
     import json as _json
     import os as _os
 
@@ -618,7 +632,14 @@ def _claim_owner(fs, root: str, checkpoint_dir: str) -> None:
         fs.write_text_exclusive(
             marker, _json.dumps({"checkpoint": checkpoint_dir}),
             fs.join(root, f"._tmp_owner_{_os.getpid()}"))
-    owner = fs.read_json(marker).get("checkpoint")
+    try:
+        owner = fs.read_json(marker).get("checkpoint")
+    except ValueError as e:
+        raise RuntimeError(
+            f"ownership marker {marker!r} is empty or partial: a claim "
+            f"died while writing it, or one is still writing it. If no "
+            f"other stream runs against {root!r}, delete the marker and "
+            f"restart.") from e
     if owner != checkpoint_dir:
         raise RuntimeError(
             f"state dir {root!r} is owned by checkpoint "
@@ -641,7 +662,6 @@ def read_entity_components(spark: SparkSession, output_dir: str,
     stores only its touched components); compact by rewriting the
     argmax result as a fresh batch dir and deleting its inputs when the
     delta count overtakes the live node count."""
-    from ..plans.fs import fs_for
     fs = fs_for(output_dir, spark)
     root = fs.join(output_dir, LABEL_STATE_SUBDIR)
     dirs = [(b, p) for b, p in _batch_dirs(fs, root)
@@ -668,70 +688,44 @@ def stream_entity_components(spark: SparkSession, input_dir: str,
     history, which is what makes continuous canonicalization viable on
     a 10^12-page crawl.
 
-    Per batch (foreachBatch):
+    Per batch:
     1. read the committed labels (latest-batch-wins over prior deltas,
-       `read_entity_components`; the current batch id is excluded so a
-       redelivered batch never reads its own crashed attempt);
+       `read_entity_components`, the batch's own dir id excluded);
     2. delta = incremental_components(batch_edges, committed) - every
        member of a touched component, relabeled where merges happened;
-    3. overwrite the delta to `_state/labels/batch=<id>/`.
+    3. overwrite the delta to `_state/labels/batch=<dir id>/`.
 
-    Exactly-once on redelivery: the write is a deterministic overwrite
-    of THIS batch's own partition dir, and both inputs (batch content,
-    prior state) are fixed - a retry rewrites byte-identical state.
-    `batch_hook(batch_id, point)` fires at 'start' and 'done' (after
-    the commit) - the crash-injection seam. Returns the
+    Batch-dir protocol and hook points: module docstring. Returns the
     StreamingQuery."""
-    from ..plans.fs import fs_for
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
     fs = fs_for(output_dir, spark)
+    root = fs.join(output_dir, LABEL_STATE_SUBDIR)
 
-    def process(batch_df, batch_id):
+    def process(batch_df, batch_id, _hook):
         from ..operators.canonicalize import incremental_components
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
         edges = batch_df.persist()
         try:
             if edges.count() == 0:
-                # an empty batch commits nothing but COMPLETES: fire
-                # 'done' so hook-coordinated operators never hang
-                if batch_hook is not None:
-                    batch_hook(batch_id, "done")
                 return
-            root = fs.join(output_dir, LABEL_STATE_SUBDIR)
             _claim_owner(fs, root, checkpoint_dir)
-            if _folded_in_snapshot(fs, root, batch_id):
+            dest = _delta_dir(fs, root, batch_id)
+            if dest is None:
                 # folded replay: this batch's labels are already inside
                 # the compaction snapshot (recomputing against it would
                 # merge the batch's edges into themselves - a no-op
                 # delta not worth a new dir)
-                if batch_hook is not None:
-                    batch_hook(batch_id, "done")
                 return
-            # dir id = batch id + compaction offset (see _compact_offset:
-            # keeps consolidated snapshots out of the stream's id space)
-            dir_id = batch_id + _compact_offset(fs, root)
             committed = read_entity_components(
-                spark, output_dir, exclude_batch=dir_id)
+                spark, output_dir, exclude_batch=dest[0])
             delta = incremental_components(edges, committed) \
                 .select(F.col("node").cast("long").alias("node"),
                         F.col("component").cast("long").alias("component"))
-            bdir = fs.join(root, f"batch={dir_id}")
-            delta.write.mode("overwrite").parquet(bdir)
+            delta.write.mode("overwrite").parquet(dest[1])
         finally:
             edges.unpersist()
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
 
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_read_stream(spark, input_dir, schema,
+                               max_files_per_trigger),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 def compact_entity_components(spark: SparkSession, output_dir: str,
@@ -778,7 +772,7 @@ def _compact_state(spark: SparkSession, output_dir: str, subdir: str,
          (first-commit-wins) with {prev_offset, folded_max: M,
          snapshot: S}. Crash before it: no trace. From the marker on,
          a checkpoint REPLAY of a batch whose dir id <= M skips its
-         commit (_folded_in_snapshot) - correct in both futures: the
+         commit (_delta_dir) - correct in both futures: the
          fold (resumed or original) includes that committed dir
          exactly once. The offset advances by TWO so post-restart
          batches land strictly after S.
@@ -796,7 +790,6 @@ def _compact_state(spark: SparkSession, output_dir: str, subdir: str,
          so the replay-skip can never suppress unfolded data."""
     import json
 
-    from ..plans.fs import fs_for
     fs = fs_for(output_dir, spark)
     root = fs.join(output_dir, subdir)
     raw = _batch_dirs(fs, root, apply_fold_exclusion=False)
@@ -862,18 +855,22 @@ DEDUP_SIGS_SUBDIR = "_state/sigs"
 LINE_STATE_SUBDIR = "_state/lines"
 
 
-def _read_union_state(spark: SparkSession, output_dir: str,
-                      subdir: str) -> Optional[DataFrame]:
-    """Committed state of an append-only UNION family (MinHash bands /
-    signatures, line digests): the plain union of every committed batch
-    dir - no argmax, rows are only ever added. None before the first
-    commit."""
-    from ..plans.fs import fs_for
+def _read_union_state(spark: SparkSession, output_dir: str, subdir: str,
+                      merge=None,
+                      exclude: Optional[int] = None) -> Optional[DataFrame]:
+    """Committed state of a batch-dir family: the union of every
+    committed dir under output_dir/subdir (dir id `exclude` left out),
+    passed through `merge` when the family needs one (argmax, sum, max
+    or distinct); append-only families (MinHash bands / signatures,
+    line digests, postings) read the plain union. None before the
+    first commit."""
     fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in _batch_dirs(fs, fs.join(output_dir, subdir))]
+    dirs = [p for b, p in _batch_dirs(fs, fs.join(output_dir, subdir))
+            if b != exclude]
     if not dirs:
         return None
-    return spark.read.parquet(*dirs)
+    df = spark.read.parquet(*dirs)
+    return df if merge is None else merge(df)
 
 
 def compact_dedup_state(spark: SparkSession,
@@ -909,9 +906,8 @@ def compact_line_digest_state(spark: SparkSession, output_dir: str) -> int:
     """Fold the line-digest batch dirs into one snapshot - the
     line-level sibling of compact_dedup_state, same protocol and
     no-concurrent-stream contract."""
-    return _compact_state(
-        spark, output_dir, LINE_STATE_SUBDIR,
-        lambda s, o: _read_union_state(s, o, LINE_STATE_SUBDIR))
+    return _compact_state(spark, output_dir, LINE_STATE_SUBDIR,
+                          read_line_digest_state)
 
 
 def stream_line_deduped_documents(spark: SparkSession, input_dir: str,
@@ -932,64 +928,45 @@ def stream_line_deduped_documents(spark: SparkSession, input_dir: str,
     only - text is never retained or re-read, so the state is viable at
     10^12 docs.
 
-    Exactly-once on redelivery: deterministic own-dir overwrites with
-    the state read excluding the current dir id (the
-    stream_deduped_documents protocol); dir ids ride the compaction
-    offset so compact_line_digest_state can fold history. `batch_hook`
-    fires at 'start', 'mid' (between the docs commit and the digest
-    commit - the crash-injection seam) and 'done'. Returns the
-    StreamingQuery."""
+    The digest read excludes the batch's own dir id (batch-dir
+    protocol, module docstring); compact_line_digest_state folds
+    history. 'mid' fires between the docs commit and the digest commit.
+    Returns the StreamingQuery."""
     from ..operators.dedup import dedup_lines_incremental
-    from ..plans.fs import fs_for
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
     fs = fs_for(output_dir, spark)
+    root = fs.join(output_dir, LINE_STATE_SUBDIR)
 
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
+    def process(batch_df, batch_id, hook):
         docs = batch_df.select(key_col, text_col).persist()
         try:
             if docs.count() == 0:
-                if batch_hook is not None:
-                    batch_hook(batch_id, "done")
                 return
-            root = fs.join(output_dir, LINE_STATE_SUBDIR)
             _claim_owner(fs, root, checkpoint_dir)
-            if _folded_in_snapshot(fs, root, batch_id):
+            dest = _delta_dir(fs, root, batch_id)
+            if dest is None:
                 # folded replay: the state commit happened (and was
                 # folded), so the docs commit that PRECEDES it in this
                 # function also happened - recomputing here would dedup
                 # the batch against its own folded digests; skip both
-                if batch_hook is not None:
-                    batch_hook(batch_id, "done")
                 return
-            dir_id = batch_id + _compact_offset(fs, root)
-            dirs = [p for b, p in _batch_dirs(fs, root) if b != dir_id]
-            seen = (spark.read.parquet(*dirs) if dirs
-                    else spark.createDataFrame([], "line_dg string"))
+            seen = _read_union_state(spark, output_dir, LINE_STATE_SUBDIR,
+                                     exclude=dest[0])
+            if seen is None:
+                seen = spark.createDataFrame([], "line_dg string")
             out, new_digests = dedup_lines_incremental(
                 docs, seen, text_col=text_col, key_col=key_col,
                 min_line_chars=min_line_chars)
             out.write.mode("overwrite").parquet(
                 fs.join(output_dir, f"docs/batch={batch_id}"))
-            if batch_hook is not None:
-                batch_hook(batch_id, "mid")
-            new_digests.write.mode("overwrite").parquet(
-                fs.join(root, f"batch={dir_id}"))
+            hook(batch_id, "mid")
+            new_digests.write.mode("overwrite").parquet(dest[1])
         finally:
             docs.unpersist()
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
 
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_read_stream(spark, input_dir, schema,
+                               max_files_per_trigger),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 LATEST_STATE_SUBDIR = "_state/latest"
@@ -1006,18 +983,11 @@ def read_latest_assertions(spark: SparkSession, output_dir: str,
     associative and commutative, so batch order, redelivery order and
     late data cannot change the result. None before the first commit."""
     from ..operators.asof import snapshot_asof
-    from ..plans.fs import fs_for
 
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, LATEST_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    df = spark.read.parquet(*dirs)
-    # cutoff = +inf: reuse the batch operator's struct-max election
-    return snapshot_asof(df, "9999-12-31 23:59:59",
-                         ts_col=ts_col, key_cols=key_cols,
-                         val_cols=val_cols)
+    return _read_union_state(
+        spark, output_dir, LATEST_STATE_SUBDIR,
+        lambda df: snapshot_asof(df, _END_OF_TIME, ts_col=ts_col,
+                                 key_cols=key_cols, val_cols=val_cols))
 
 
 def stream_latest_assertions(spark: SparkSession, input_dir: str,
@@ -1035,57 +1005,24 @@ def stream_latest_assertions(spark: SparkSession, input_dir: str,
     keys along warc_ts), and `read_latest_assertions` serves the
     current graph at any time.
 
-    STATELESS per batch - the simplest member of the batch-dir state
-    family: each micro-batch writes only ITS OWN per-key struct-max
-    delta (a map-side-combinable aggregate over the batch, bounded by
-    batch size); no committed-state read, no join. The read side
-    argmax-merges the deltas, and because ts-argmax is associative the
-    merge is exact under any batch ordering, late data included. Crash
-    safety is inherited wholesale: a torn delta dir (no _SUCCESS) is
-    invisible to readers, the retry's overwrite of its own dir is
-    byte-identical, and compact_latest_assertions folds deltas behind
-    the same offset protocol as the CC labels. Dir ids are offset by
-    _compact_offset so a consolidated snapshot can never be overwritten
-    by a post-resume micro-batch.
+    Stateless per batch (`_delta_stream`): each micro-batch writes only
+    ITS OWN per-key struct-max delta (a map-side-combinable aggregate
+    over the batch, bounded by batch size). The read side argmax-merges
+    the deltas, and because ts-argmax is associative the merge is exact
+    under any batch ordering, late data included;
+    compact_latest_assertions folds them.
 
     Scale: state is one row per key ASSERTED IN THE WINDOW per delta,
     and compaction bounds the read fan-in; the 10^12-key full graph
     only ever materializes at read time, distributed."""
     from ..operators.asof import snapshot_asof
-    from ..plans.fs import fs_for
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    fs = fs_for(output_dir, spark)
-
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, LATEST_STATE_SUBDIR)
-        _claim_owner(fs, root, checkpoint_dir)
-        delta = snapshot_asof(batch_df, "9999-12-31 23:59:59",
-                              ts_col=ts_col, key_cols=key_cols,
-                              val_cols=val_cols)
-        if not delta.take(1):
-            if batch_hook is not None:  # empty batch still completes
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # replay of a batch a snapshot already folded
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
-
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _delta_stream(
+        spark, _read_stream(spark, input_dir, schema, max_files_per_trigger),
+        output_dir, LATEST_STATE_SUBDIR, checkpoint_dir, available_now,
+        batch_hook,
+        lambda df: snapshot_asof(df, _END_OF_TIME, ts_col=ts_col,
+                                 key_cols=key_cols, val_cols=val_cols))
 
 
 def compact_latest_assertions(spark: SparkSession, output_dir: str,
@@ -1114,16 +1051,10 @@ def read_host_graph(spark: SparkSession,
     and commutative, so batch order and redelivery cannot change the
     merged graph (the additive sibling of the ts-argmax merge in
     read_latest_assertions). None before the first commit."""
-    from ..plans.fs import fs_for
-
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, WEBGRAPH_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return (spark.read.parquet(*dirs)
-            .groupBy("src_host", "dst_host")
-            .agg(F.sum("n_links").cast("long").alias("n_links")))
+    return _read_union_state(
+        spark, output_dir, WEBGRAPH_STATE_SUBDIR,
+        lambda df: df.groupBy("src_host", "dst_host")
+        .agg(F.sum("n_links").cast("long").alias("n_links")))
 
 
 def stream_web_graph(spark: SparkSession, input_dir: str,
@@ -1135,48 +1066,21 @@ def stream_web_graph(spark: SparkSession, input_dir: str,
     """Continuously-maintained web link graph: HTML pages arrive as a
     stream, each micro-batch extracts its anchors (sources/weblinks.py,
     pure JVM) and writes ONLY its own (src_host, dst_host, n_links)
-    delta - stateless per batch, no committed-state read, no join, the
-    same batch-dir protocol as stream_latest_assertions. The read side
+    delta - stateless per batch (`_delta_stream`). The read side
     sum-merges (exact under any ordering because counts are additive);
-    `compact_host_graph` folds deltas behind the shared crash-safe
-    offset protocol. A torn delta dir (no _SUCCESS) is invisible to
-    readers and the retry's overwrite is idempotent.
+    `compact_host_graph` folds the deltas.
 
     Scale: a delta is bounded by the batch's distinct host pairs (the
     map-side-combinable groupBy absorbs per-page fan-out); the full
     10^10-edge host graph only materializes distributed at read time,
     and compaction bounds the read fan-in."""
-    from ..plans.fs import fs_for
     from ..sources.weblinks import extract_links, host_edges
 
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    fs = fs_for(output_dir, spark)
-
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, WEBGRAPH_STATE_SUBDIR)
-        _claim_owner(fs, root, checkpoint_dir)
-        delta = host_edges(extract_links(batch_df), drop_self=drop_self)
-        if not delta.take(1):
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # replay of a batch a snapshot already folded:
-            # re-writing would DOUBLE the additive edge counts
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
-
-    writer = (pages.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _delta_stream(
+        spark, read_pages_stream(spark, input_dir, max_files_per_trigger),
+        output_dir, WEBGRAPH_STATE_SUBDIR, checkpoint_dir, available_now,
+        batch_hook,
+        lambda df: host_edges(extract_links(df), drop_self=drop_self))
 
 
 def compact_host_graph(spark: SparkSession, output_dir: str,
@@ -1199,19 +1103,11 @@ def read_table_fingerprint(spark: SparkSession,
     EQUALS sketches.table_fingerprint of the union of every ingested
     batch (mergeability is literal column addition - the batch
     operator's contract). None before the first commit."""
-    from ..plans.fs import fs_for
-
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir,
-                                    FINGERPRINT_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return (spark.read.parquet(*dirs)
-            .groupBy("bucket")
-            .agg(F.sum("n_rows").cast("long").alias("n_rows"),
-                 F.sum("hash_sum").cast("decimal(38,0)")
-                 .alias("hash_sum")))
+    return _read_union_state(
+        spark, output_dir, FINGERPRINT_STATE_SUBDIR,
+        lambda df: df.groupBy("bucket")
+        .agg(F.sum("n_rows").cast("long").alias("n_rows"),
+             F.sum("hash_sum").cast("decimal(38,0)").alias("hash_sum")))
 
 
 def stream_table_fingerprint(spark: SparkSession, input_dir: str,
@@ -1222,47 +1118,20 @@ def stream_table_fingerprint(spark: SparkSession, input_dir: str,
                              available_now: bool = True,
                              batch_hook=None):
     """Continuously-maintained table content checksum: each micro-batch
-    commits ONLY its own 64-row fingerprint delta (stateless per
-    batch, the stream_web_graph protocol) - so at any point the
-    streaming ingest can be VERIFIED against a batch recompute by
-    comparing n_buckets rows instead of re-reading the corpus: the
-    end-to-end exactly-once receipt for the whole landing pipeline
-    (a lost or duplicated batch shows up as a bucket mismatch).
-    Compaction folds deltas behind the shared crash-safe offset
-    protocol; a torn delta dir (no _SUCCESS) is invisible and the
-    retry's overwrite is idempotent."""
+    commits ONLY its own 64-row fingerprint delta (stateless per batch,
+    `_delta_stream`) - so at any point the streaming ingest can be
+    VERIFIED against a batch recompute by comparing n_buckets rows
+    instead of re-reading the corpus: the end-to-end exactly-once
+    receipt for the whole landing pipeline (a lost or duplicated batch
+    shows up as a bucket mismatch). compact_table_fingerprint folds
+    the deltas."""
     from ..operators.sketches import table_fingerprint
-    from ..plans.fs import fs_for
 
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    fs = fs_for(output_dir, spark)
-
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, FINGERPRINT_STATE_SUBDIR)
-        _claim_owner(fs, root, checkpoint_dir)
-        delta = table_fingerprint(batch_df, list(cols),
-                                  n_buckets=n_buckets)
-        if not delta.take(1):
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # replay of a batch a snapshot already folded:
-            # re-writing would DOUBLE the additive checksum mass
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
-
-    writer = (pages.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _delta_stream(
+        spark, read_pages_stream(spark, input_dir, max_files_per_trigger),
+        output_dir, FINGERPRINT_STATE_SUBDIR, checkpoint_dir, available_now,
+        batch_hook,
+        lambda df: table_fingerprint(df, list(cols), n_buckets=n_buckets))
 
 
 def compact_table_fingerprint(spark: SparkSession, output_dir: str,
@@ -1285,15 +1154,10 @@ def read_token_counters(spark: SparkSession,
     union, so the merge EQUALS cm_build of every ingested token
     (`cm_merge`'s contract, proven in the batch tests), under any
     batch order or redelivery pattern. None before the first commit."""
-    from ..plans.fs import fs_for
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, CM_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return (spark.read.parquet(*dirs)
-            .groupBy("row_ix", "col_ix")
-            .agg(F.sum("cnt").cast("long").alias("cnt")))
+    return _read_union_state(
+        spark, output_dir, CM_STATE_SUBDIR,
+        lambda df: df.groupBy("row_ix", "col_ix")
+        .agg(F.sum("cnt").cast("long").alias("cnt")))
 
 
 def read_vocab_registers(spark: SparkSession,
@@ -1304,14 +1168,9 @@ def read_vocab_registers(spark: SparkSession,
     EQUALS hll_sketch of the union of every ingested token
     (`hll_merge`'s contract), duplicate-insensitively. None before
     the first commit."""
-    from ..plans.fs import fs_for
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, HLL_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return (spark.read.parquet(*dirs)
-            .groupBy("reg_ix").agg(F.max("rho").alias("rho")))
+    return _read_union_state(
+        spark, output_dir, HLL_STATE_SUBDIR,
+        lambda df: df.groupBy("reg_ix").agg(F.max("rho").alias("rho")))
 
 
 def stream_corpus_sketches(spark: SparkSession, input_dir: str,
@@ -1334,19 +1193,17 @@ def stream_corpus_sketches(spark: SparkSession, input_dir: str,
 
     Both deltas commit under one batch id; a crash between the two
     writes is repaired by the checkpoint's batch replay (same dir ids,
-    idempotent overwrite - the stream_warc_ingest two-dir precedent).
-    A torn dir (no _SUCCESS) is invisible to readers. Compaction folds
-    each family behind the shared crash-safe offset protocol."""
+    idempotent overwrite). Between the two commits the hook fires
+    'cm_committed', or 'cm_skipped' when a folded replay skipped the
+    CM write. Compaction folds each family separately."""
     from ..operators.sketches import cm_build, hll_sketch
     from ..operators.text import whitespace_tokens
-    from ..plans.fs import fs_for
 
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
     fs = fs_for(output_dir, spark)
+    cm_root = fs.join(output_dir, CM_STATE_SUBDIR)
+    hll_root = fs.join(output_dir, HLL_STATE_SUBDIR)
 
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
+    def process(batch_df, batch_id, hook):
         # persist the tokenized batch: it feeds BOTH sketch builds and
         # the emptiness probe (review fix: un-persisted, the batch was
         # scanned + tokenized three times per trigger)
@@ -1354,45 +1211,25 @@ def stream_corpus_sketches(spark: SparkSession, input_dir: str,
             F.explode(whitespace_tokens(F.col("text"))).alias("token")
         ).persist()
         try:
-            cm_root = fs.join(output_dir, CM_STATE_SUBDIR)
-            hll_root = fs.join(output_dir, HLL_STATE_SUBDIR)
             _claim_owner(fs, cm_root, checkpoint_dir)
             _claim_owner(fs, hll_root, checkpoint_dir)
             if not toks.take(1):  # cheap: tokenization is cached, no
                 # point running the full d-way aggregate just to learn
                 # the batch is empty (review fix)
-                if batch_hook is not None:
-                    batch_hook(batch_id, "done")
-                return  # no tokens in this batch -> nothing to commit
-            cm_delta = cm_build(toks, "token", d=d, w=w)
+                return
             # per-family folded-replay skips (independent: a crash
             # between the two commits can leave one family folded and
             # the other pending)
-            cm_dest = _delta_dir(fs, cm_root, batch_id)
-            if cm_dest is not None:
-                cm_delta.write.mode("overwrite").parquet(cm_dest)
-                if batch_hook is not None:
-                    batch_hook(batch_id, "cm_committed")
-            elif batch_hook is not None:
-                # round-6 (r5 ADVICE): a folded replay skips the CM
-                # write - firing 'cm_committed' for a commit that never
-                # happened would let crash-injection tests sequence
-                # against a phantom event; report the skip distinctly
-                batch_hook(batch_id, "cm_skipped")
-            hll_dest = _delta_dir(fs, hll_root, batch_id)
-            if hll_dest is not None:
-                hll_sketch(toks, "token", [], p=p) \
-                    .write.mode("overwrite").parquet(hll_dest)
+            cm_done = _commit_delta(fs, cm_root, batch_id,
+                                    cm_build(toks, "token", d=d, w=w))
+            hook(batch_id, "cm_committed" if cm_done else "cm_skipped")
+            _commit_delta(fs, hll_root, batch_id,
+                          hll_sketch(toks, "token", [], p=p))
         finally:
             toks.unpersist()
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
 
-    writer = (pages.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(read_pages_stream(spark, input_dir, max_files_per_trigger),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 def compact_token_counters(spark: SparkSession, output_dir: str,
@@ -1413,6 +1250,8 @@ def compact_vocab_registers(spark: SparkSession, output_dir: str,
 
 WARC_PAGES_SUBDIR = "_state/warc_pages"
 WARC_CDX_SUBDIR = "_state/warc_cdx"
+_BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
+                       "length long, content binary")
 
 
 def read_warc_cdx(spark: SparkSession,
@@ -1423,13 +1262,7 @@ def read_warc_cdx(spark: SparkSession,
     once; revisit supersede is a READ policy on pages, the index keeps
     every archived record like Common Crawl's). None before the first
     commit."""
-    from ..plans.fs import fs_for
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, WARC_CDX_SUBDIR))]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_union_state(spark, output_dir, WARC_CDX_SUBDIR)
 
 
 def read_warc_pages(spark: SparkSession,
@@ -1441,16 +1274,11 @@ def read_warc_pages(spark: SparkSession,
     read_latest_assertions elects heads). None before the first
     commit."""
     from ..operators.asof import snapshot_asof
-    from ..plans.fs import fs_for
 
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, WARC_PAGES_SUBDIR))]
-    if not dirs:
-        return None
-    df = spark.read.parquet(*dirs)
-    return snapshot_asof(df, "9999-12-31 23:59:59", ts_col="warc_ts",
-                         key_cols=("url",), val_cols=("html",))
+    return _read_union_state(
+        spark, output_dir, WARC_PAGES_SUBDIR,
+        lambda df: snapshot_asof(df, _END_OF_TIME, ts_col="warc_ts",
+                                 key_cols=("url",), val_cols=("html",)))
 
 
 def stream_warc_ingest(spark: SparkSession, input_dir: str,
@@ -1465,70 +1293,39 @@ def stream_warc_ingest(spark: SparkSession, input_dir: str,
     source - one row per file, exactly the per-~1GB-blob partition
     unit the batch walk wants), each micro-batch runs the
     Content-Length byte walk (sources/warc.py) on ITS OWN files and
-    writes only its (url, warc_ts, html) delta - stateless per batch,
-    the same batch-dir protocol as stream_web_graph, so crash safety
-    (torn dirs invisible, idempotent retries, compaction offsets) is
-    inherited wholesale. `read_warc_pages` merges deltas by
-    warc_ts-argmax per url, so re-crawled pages supersede exactly as
-    in the batch table.
+    writes only its (url, warc_ts, html) delta - stateless per batch.
+    `read_warc_pages` merges deltas by warc_ts-argmax per url, so
+    re-crawled pages supersede exactly as in the batch table.
 
     Scale: a delta is bounded by the batch's record count; the full
     page corpus only materializes distributed at read time, and
     `compact_warc_pages` folds the dirs when their count overtakes
     the live url count."""
-    from ..plans.fs import fs_for
     from ..sources.warc import warc_pages
 
-    bin_schema = ("path string, modificationTime timestamp, "
-                  "length long, content binary")
-    reader = spark.readStream.format("binaryFile").schema(bin_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               max_files_per_trigger)
-    stream = reader.load(input_dir)
     fs = fs_for(output_dir, spark)
+    root = fs.join(output_dir, WARC_PAGES_SUBDIR)
+    cdx_root = fs.join(output_dir, WARC_CDX_SUBDIR)
 
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, WARC_PAGES_SUBDIR)
+    def process(batch_df, batch_id, _hook):
         _claim_owner(fs, root, checkpoint_dir)
         segs = batch_df.select(F.col("path").alias("segment_id"),
                                F.col("content").alias("blob"))
         if maintain_cdx:
             # index EVERY response record of this batch's segments
             # (the index keeps non-html archives the page state
-            # filters out); same batch-dir idempotence as the pages
-            # delta, written first so a crash between the two writes
-            # retries both overwrites harmlessly
+            # filters out), written first so a crash between the two
+            # writes retries both overwrites harmlessly
             from ..sources.cdx import cdx_index
-            cdx_root = fs.join(output_dir, WARC_CDX_SUBDIR)
             _claim_owner(fs, cdx_root, checkpoint_dir)
-            cdx_dest = _delta_dir(fs, cdx_root, batch_id)
-            if cdx_dest is not None:  # folded replay: index rows would
-                # duplicate (append-only union read)
-                cdx_index(segs).write.mode("overwrite").parquet(cdx_dest)
-        delta = warc_pages(segs,
-                           content_type_prefix=content_type_prefix)
-        if not delta.take(1):
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # folded replay (pages read is ts-argmax, so
-            # this is economy, not correctness)
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
+            _commit_delta(fs, cdx_root, batch_id, cdx_index(segs))
+        delta = warc_pages(segs, content_type_prefix=content_type_prefix)
+        if delta.take(1):
+            _commit_delta(fs, root, batch_id, delta)
 
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_read_stream(spark, input_dir, _BINARY_FILE_SCHEMA,
+                               max_files_per_trigger, fmt="binaryFile"),
+                  checkpoint_dir, available_now, batch_hook, process)
 
 
 def compact_warc_pages(spark: SparkSession, output_dir: str,
@@ -1554,14 +1351,7 @@ def read_inverted_index(spark: SparkSession,
     corpus stats recompute from the postings at query time, so idf and
     dl normalization always reflect the whole corpus so far).  None
     before the first commit."""
-    from ..plans.fs import fs_for
-
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, POSTINGS_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_union_state(spark, output_dir, POSTINGS_STATE_SUBDIR)
 
 
 def stream_inverted_index(spark: SparkSession, input_dir: str,
@@ -1575,13 +1365,9 @@ def stream_inverted_index(spark: SparkSession, input_dir: str,
     stream, each micro-batch writes ONLY its own posting delta
     (retrieval.build_inverted_index over the batch - one scan, text
     never shuffles) to _state/postings/batch=<dir id>/.  Stateless per
-    batch: no committed-state read, no join - the same additive-delta
-    protocol as stream_web_graph, because postings of disjoint doc
-    sets compose by plain union.  A torn delta dir (no _SUCCESS) is
-    invisible to readers; a redelivered batch overwrites its own dir
-    idempotently; `compact_inverted_index` folds the dirs behind the
-    shared crash-safe offset protocol when their count overtakes the
-    read fan-in budget.
+    batch (`_delta_stream`), because postings of disjoint doc sets
+    compose by plain union; `compact_inverted_index` folds the dirs
+    when their count overtakes the read fan-in budget.
 
     Scale: a delta is bounded by the batch's distinct (doc, term)
     pairs; the full trillion-posting index only materializes
@@ -1590,40 +1376,13 @@ def stream_inverted_index(spark: SparkSession, input_dir: str,
     through stream_latest_assertions-style supersede upstream and
     rebuild their postings, or tombstone at query time."""
     from ..operators.retrieval import build_inverted_index
-    from ..plans.fs import fs_for
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    fs = fs_for(output_dir, spark)
-
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, POSTINGS_STATE_SUBDIR)
-        _claim_owner(fs, root, checkpoint_dir)
-        delta = build_inverted_index(
-            batch_df.select(key_col, text_col), text_col, key_col)
-        if not delta.take(1):
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # replay of a batch a snapshot already folded:
-            # duplicate postings would double tf/df for its documents
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
-
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _delta_stream(
+        spark, _read_stream(spark, input_dir, schema, max_files_per_trigger),
+        output_dir, POSTINGS_STATE_SUBDIR, checkpoint_dir, available_now,
+        batch_hook,
+        lambda df: build_inverted_index(df.select(key_col, text_col),
+                                        text_col, key_col))
 
 
 def compact_inverted_index(spark: SparkSession, output_dir: str,
@@ -1647,14 +1406,8 @@ def read_assertion_set(spark: SparkSession,
     two micro-batches) cannot change the set - exactly the property the
     fusion vote needs, since a source repeating itself must gain no
     extra weight. None before the first commit."""
-    from ..plans.fs import fs_for
-
-    fs = fs_for(output_dir, spark)
-    dirs = [p for _, p in
-            _batch_dirs(fs, fs.join(output_dir, FUSION_STATE_SUBDIR))]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).distinct()
+    return _read_union_state(spark, output_dir, FUSION_STATE_SUBDIR,
+                             lambda df: df.distinct())
 
 
 def read_fused_assertions(spark: SparkSession, output_dir: str,
@@ -1687,20 +1440,17 @@ def stream_fused_assertions(spark: SparkSession, input_dir: str,
     `read_fused_assertions` serves the weighted-vote election at any
     time.
 
-    STATELESS per batch, the set-union member of the batch-dir state
-    family (stream_web_graph folds by +, stream_corpus_sketches by
-    +/max, stream_latest_assertions by ts-argmax - this one folds by
-    set union): each micro-batch writes only its own WITHIN-BATCH
-    DISTINCT assertion delta; no committed-state read, no join.
-    Cross-batch duplicates are absorbed on the read side (distinct is
-    idempotent), so the merged state is exactly the RDF set of every
-    assertion ever ingested and the election over it equals the batch
-    `fuse_triples` over the same corpus - duplicates across batches
-    gain no weight, which a naive additive support-sum state would get
-    WRONG. Crash safety inherited wholesale: torn delta dirs invisible,
-    retries overwrite their own dir byte-identically, and
-    compact_fused_assertions folds (union + distinct) behind the shared
-    marker-first offset protocol.
+    Stateless per batch (`_delta_stream`), the set-union member of the
+    batch-dir state family (stream_web_graph folds by +,
+    stream_corpus_sketches by +/max, stream_latest_assertions by
+    ts-argmax - this one folds by set union): each micro-batch writes
+    only its own WITHIN-BATCH DISTINCT assertion delta. Cross-batch
+    duplicates are absorbed on the read side (distinct is idempotent),
+    so the merged state is exactly the RDF set of every assertion ever
+    ingested and the election over it equals the batch `fuse_triples`
+    over the same corpus - duplicates across batches gain no weight,
+    which a naive additive support-sum state would get WRONG.
+    compact_fused_assertions folds (union + distinct).
 
     Scale: each delta is bounded by the batch's distinct assertions;
     compaction bounds read fan-in and re-dedups across batches. The
@@ -1708,39 +1458,11 @@ def stream_fused_assertions(spark: SparkSession, input_dir: str,
     `operators.fusion.fuse_triples_incremental` (touched-group
     re-election); this stream is the landing path that FEEDS such a
     store."""
-    from ..plans.fs import fs_for
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    fs = fs_for(output_dir, spark)
     cols = [c.split()[0] for c in schema.split(",")]
-
-    def process(batch_df, batch_id):
-        if batch_hook is not None:
-            batch_hook(batch_id, "start")
-        root = fs.join(output_dir, FUSION_STATE_SUBDIR)
-        _claim_owner(fs, root, checkpoint_dir)
-        delta = batch_df.select(*cols).distinct()
-        if not delta.take(1):
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        dest = _delta_dir(fs, root, batch_id)
-        if dest is None:  # replay of a batch a snapshot already folded
-            if batch_hook is not None:
-                batch_hook(batch_id, "done")
-            return
-        delta.write.mode("overwrite").parquet(dest)
-        if batch_hook is not None:
-            batch_hook(batch_id, "done")
-
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _delta_stream(
+        spark, _read_stream(spark, input_dir, schema, max_files_per_trigger),
+        output_dir, FUSION_STATE_SUBDIR, checkpoint_dir, available_now,
+        batch_hook, lambda df: df.select(*cols).distinct())
 
 
 def compact_fused_assertions(spark: SparkSession, output_dir: str,

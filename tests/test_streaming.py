@@ -203,10 +203,28 @@ def test_stream_near_dedup_across_batches(spark, tmp_path):
     spark.createDataFrame([(1, text_a), (2, text_b)],
                           "doc_id long, text string") \
         .coalesce(1).write.mode("append").parquet(in_dir)
-    q = stream_deduped_documents(spark, in_dir, out, ckpt)
+    # a zero-row file: its own micro-batch, which commits nothing but
+    # still completes with 'done'
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.table({"doc_id": pa.array([], pa.int64()),
+                             "text": pa.array([], pa.string())}),
+                   os.path.join(in_dir, "empty.parquet"))
+    points = {}
+
+    def record(batch_id, point):
+        points.setdefault(batch_id, []).append(point)
+
+    q = stream_deduped_documents(spark, in_dir, out, ckpt,
+                                 max_files_per_trigger=1,
+                                 batch_hook=record)
     q.awaitTermination(180)
     assert {r.doc_id for r in
             read_streamed_documents(spark, out).collect()} == {1, 2}
+    assert sorted(points.values()) == [["start", "done"],
+                                       ["start", "mid", "done"]]
 
     # batch 2: exact dup of A, near-dup of A, fresh C, in-batch dup of C
     spark.createDataFrame(
@@ -215,6 +233,7 @@ def test_stream_near_dedup_across_batches(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(in_dir)
 
     def crash_mid(batch_id, point):
+        record(batch_id, point)
         if point == "mid":
             raise RuntimeError("injected crash before state commit")
 
@@ -227,8 +246,10 @@ def test_stream_near_dedup_across_batches(spark, tmp_path):
     assert q2.exception() is not None
 
     # restart, no fault: the crashed batch is re-delivered and completes
-    q3 = stream_deduped_documents(spark, in_dir, out, ckpt)
+    q3 = stream_deduped_documents(spark, in_dir, out, ckpt,
+                                  batch_hook=record)
     q3.awaitTermination(180)
+    assert points[2] == ["start", "mid", "start", "mid", "done"]
     rows = read_streamed_documents(spark, out).collect()
     got = sorted(r.doc_id for r in rows)
     # 3 (exact cross-batch dup), 4 (near cross-batch dup) and 6 (in-batch
@@ -972,10 +993,14 @@ def test_streaming_shacl_gate_clean_and_quarantine(spark, pages_dir,
                     "properties": [{"path": V, "min_count": 1,
                                     "max_count": 1}]}]
     out1, ck1 = str(tmp_path / "kg1"), str(tmp_path / "ck1")
-    q = stream_knowledge_graph(spark, pages_dir, out1, ck1, _table(),
-                               aliases, max_files_per_trigger=1,
-                               shapes=clean_shape)
+    points1, points2 = {}, {}
+    q = stream_knowledge_graph(
+        spark, pages_dir, out1, ck1, _table(), aliases,
+        max_files_per_trigger=1, shapes=clean_shape,
+        batch_hook=lambda b, p: points1.setdefault(b, []).append(p))
     q.awaitTermination(300)
+    assert sorted(points1) == [0, 1, 2]
+    assert all(p == ["start", "mid", "done"] for p in points1.values())
     assert read_streamed_graph(spark, out1, "triples").count() > 0
     viol = read_streamed_graph(spark, out1, "violations")
     assert viol is None or viol.count() == 0
@@ -983,11 +1008,15 @@ def test_streaming_shacl_gate_clean_and_quarantine(spark, pages_dir,
     bad_shape = [{"shape": "s", "target_subjects_of": V,
                   "properties": [{"path": V, "pattern": "^zz"}]}]
     out2, ck2 = str(tmp_path / "kg2"), str(tmp_path / "ck2")
-    q2 = stream_knowledge_graph(spark, pages_dir, out2, ck2, _table(),
-                                aliases, max_files_per_trigger=1,
-                                shapes=bad_shape,
-                                quarantine_on_violation=True)
+    q2 = stream_knowledge_graph(
+        spark, pages_dir, out2, ck2, _table(), aliases,
+        max_files_per_trigger=1, shapes=bad_shape,
+        quarantine_on_violation=True,
+        batch_hook=lambda b, p: points2.setdefault(b, []).append(p))
     q2.awaitTermination(300)
+    # quarantined batches complete without reaching 'mid'
+    assert sorted(points2) == [0, 1, 2]
+    assert all(p == ["start", "done"] for p in points2.values())
     assert read_streamed_graph(spark, out2, "triples") is None
     reports = read_streamed_graph(spark, out2, "violations")
     assert reports.count() > 0
