@@ -28,7 +28,8 @@ from .operators.canonicalize import (
     canonicalize_triples, connected_components, edges_from_uris)
 from .operators.linking import link_exact
 from .operators.triples import convert_table_group_spark
-from .plans.lineage import observe_metrics, write_resumable
+from .plans.lineage import (
+    nothing_pending, observe_metrics, pending_buckets, write_resumable)
 
 
 def link_triple_objects(triples: DataFrame, aliases: DataFrame) -> DataFrame:
@@ -295,24 +296,29 @@ def build_knowledge_graph(spark: SparkSession, pages: DataFrame, table: Table,
       output_dir/triples/   canonicalized triples (bucketed by url hash)
       output_dir/entities/  (node, component, canonical_uri)
       output_dir/_manifests under each table dir (commit records)
+
+    A re-run over the same input resumes: each table writes only its
+    still-pending buckets. When all three tables are complete the re-run
+    reads their manifests and returns `nothing_pending` manifests without
+    building the graph, so it runs no Spark job.
     """
+    tables = {"triples": n_buckets, "entities": max(n_buckets // 4, 1),
+              "errors": max(n_buckets // 4, 1)}
+    if not any(pending_buckets(os.path.join(output_dir, name), n)
+               for name, n in tables.items()):
+        return {**{name: nothing_pending(n) for name, n in tables.items()},
+                "metrics": {}}
+
     canonical_triples, entity_map, obs, errors = kg_canonical_triples(
         pages, table, aliases, mode=mode)
 
     # E: materialize with lineage (graph tables + the cell-error table --
     # the data-quality channel, reference Rdf/Converter.cs:456-461)
-    t_manifest = write_resumable(canonical_triples,
-                                 os.path.join(output_dir, "triples"),
-                                 n_buckets=n_buckets)
-    e_manifest = write_resumable(
-        entity_map.withColumn("url", F.col("uri")),
-        os.path.join(output_dir, "entities"), n_buckets=max(n_buckets // 4, 1))
-    err_manifest = write_resumable(
-        errors, os.path.join(output_dir, "errors"),
-        n_buckets=max(n_buckets // 4, 1))
-    return {
-        "triples": t_manifest,
-        "entities": e_manifest,
-        "errors": err_manifest,
-        "metrics": dict(obs.get) if t_manifest["total_rows"] else {},
-    }
+    frames = {"triples": canonical_triples,
+              "entities": entity_map.withColumn("url", F.col("uri")),
+              "errors": errors}
+    out = {name: write_resumable(frames[name], os.path.join(output_dir, name),
+                                 n_buckets=n)
+           for name, n in tables.items()}
+    out["metrics"] = dict(obs.get) if out["triples"]["total_rows"] else {}
+    return out

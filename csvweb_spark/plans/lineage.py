@@ -16,8 +16,17 @@ metadata instead):
   written parquet footers, Iceberg-manifest style) into
   _manifests/<run_id>.json, written ONLY after the data write succeeds -
   the manifest is the commit record;
-* `resume_filter` anti-joins the input against committed partition keys so
-  a restarted job re-processes only uncommitted buckets;
+* a `write_resumable` manifest also lists the buckets it was responsible
+  for (`covered`: all not yet committed when it started); a covered bucket
+  with no rows is committed-empty. A bare `write_partitioned` covers only
+  what it wrote, since its caller may have filtered the input;
+* `pending_buckets` reads each manifest once and returns the uncommitted
+  buckets; `resume_filter` / `write_resumable` keep only their rows, and a
+  re-run over a complete table is a manifest read with no Spark job. A
+  resume assumes an UNCHANGED input: rows landing in a committed (or
+  committed-empty) bucket are dropped;
+* readers see only `partitions`: `covered` decides what is done, never
+  what is visible;
 * `observe_metrics` attaches df.observe counters (the Spark-native
   equivalent of the reference's IProgress reporting every 50 rows,
   Rdf/Converter.cs:332-335).
@@ -56,53 +65,63 @@ def observe_metrics(df: DataFrame, name: str = "triples") -> tuple[DataFrame, Ob
                       F.approx_count_distinct("url").alias("urls")), obs
 
 
+def _manifests(output_dir: str) -> list[dict]:
+    """Every commit manifest of the table, each listed and parsed once."""
+    fs = fs_for(output_dir)
+    mdir = fs.join(output_dir, "_manifests")
+    if not fs.isdir(mdir):
+        return []
+    return [fs.read_json(fs.join(mdir, fn))
+            for fn in sorted(fs.listdir(mdir)) if fn.endswith(".json")]
+
+
+def _written(manifests: list[dict]) -> set[int]:
+    return {int(p["part_key"]) for m in manifests
+            for p in m.get("partitions", [])}
+
+
 def committed_partitions(output_dir: str) -> set[int]:
-    fs = fs_for(output_dir)
-    mdir = fs.join(output_dir, "_manifests")
-    done: set[int] = set()
-    if not fs.isdir(mdir):
-        return done
-    for fn in fs.listdir(mdir):
-        if fn.endswith(".json"):
-            manifest = fs.read_json(fs.join(mdir, fn))
-            for p in manifest.get("partitions", []):
-                done.add(int(p["part_key"]))
-    return done
+    """Buckets with committed (visible) data."""
+    return _written(_manifests(output_dir))
 
 
-def _committed_bucket_counts(output_dir: str) -> set[int]:
-    fs = fs_for(output_dir)
-    mdir = fs.join(output_dir, "_manifests")
-    out: set[int] = set()
-    if not fs.isdir(mdir):
-        return out
-    for fn in fs.listdir(mdir):
-        if fn.endswith(".json"):
-            out.add(int(fs.read_json(fs.join(mdir, fn)).get("n_buckets",
-                                                            -1)))
-    return out
-
-
-def resume_filter(df: DataFrame, output_dir: str, url_col: str = "url",
-                  n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    """Drop rows whose partition bucket is already committed (restart path).
+def pending_buckets(output_dir: str,
+                    n_buckets: int = N_BUCKETS_DEFAULT) -> set[int]:
+    """Buckets of the table not yet committed: neither written by a
+    manifest's `partitions` nor covered (committed-empty) by a
+    write_resumable run. Empty means the table is complete.
 
     The bucket count is part of the table's identity: committed part_keys
     were computed mod the ORIGINAL n_buckets, so resuming with a different
     count would silently drop never-written rows (new bucket collides with
     a committed id) and reprocess committed ones - the mismatch raises
     instead (review fix)."""
-    seen = _committed_bucket_counts(output_dir)
+    manifests = _manifests(output_dir)
+    seen = {int(m.get("n_buckets", -1)) for m in manifests}
     if seen and seen != {n_buckets}:
         raise ValueError(
             f"resume with n_buckets={n_buckets} but {output_dir} was "
             f"committed with n_buckets={sorted(seen)}; the bucket count "
             f"cannot change across resumes of one output table")
-    done = committed_partitions(output_dir)
+    done = _written(manifests)
+    done.update(int(k) for m in manifests for k in m.get("covered", []))
+    return set(range(n_buckets)) - done
+
+
+def _keep_pending(df: DataFrame, url_col: str, n_buckets: int,
+                  pending: set[int]) -> DataFrame:
     keyed = with_part_key(df, url_col, n_buckets)
-    if not done:
+    if len(pending) == n_buckets:
         return keyed
-    return keyed.filter(~F.col("part_key").isin(sorted(done)))
+    return keyed.filter(F.col("part_key").isin(sorted(pending)))
+
+
+def resume_filter(df: DataFrame, output_dir: str, url_col: str = "url",
+                  n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
+    """Keep only rows whose partition bucket is still pending (restart
+    path); raises on an n_buckets mismatch (pending_buckets)."""
+    return _keep_pending(df, url_col, n_buckets,
+                         pending_buckets(output_dir, n_buckets))
 
 
 def _partition_stats_from_footers(data_dir: str, part_key: int,
@@ -144,7 +163,9 @@ def _partition_stats_from_footers(data_dir: str, part_key: int,
 def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
                       n_buckets: int = N_BUCKETS_DEFAULT,
                       run_id: Optional[str] = None) -> dict:
-    """Write df partitioned by part_key + commit a lineage manifest.
+    """Write df partitioned by part_key + commit a lineage manifest that
+    covers only the partitions written (the caller may have filtered the
+    input, so absent buckets are not done).
 
     SINGLE materialization of the input: the data write is the only job
     that computes the pipeline; per-partition stats then come from the
@@ -165,6 +186,11 @@ def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
     authoritative ones for a partition. (Data time travel is
     commit-VISIBILITY only: overwritten partitions keep the newest files,
     like an Iceberg table after snapshot expiration.)"""
+    return _write(df, output_dir, url_col, n_buckets, run_id, covered=set())
+
+
+def _write(df: DataFrame, output_dir: str, url_col: str, n_buckets: int,
+           run_id: Optional[str], covered: set[int]) -> dict:
     spark = df.sparkSession
     # uuid suffix (round-3 ADVICE): manifest commits are first-commit-wins
     # on Hadoop filesystems, so the default run_id must be unique even for
@@ -215,6 +241,7 @@ def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "n_buckets": n_buckets,
         "partitions": stats,
+        "covered": sorted(covered),
         "total_rows": int(sum(s["rows"] for s in stats)),
     }
     mdir = fs.join(output_dir, "_manifests")
@@ -225,12 +252,24 @@ def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
     return manifest
 
 
+def nothing_pending(n_buckets: int) -> dict:
+    """The manifest-shaped result of a resumable write over a complete
+    table: nothing written, nothing committed, no Spark job."""
+    return {"run_id": None, "n_buckets": n_buckets, "partitions": [],
+            "covered": [], "total_rows": 0}
+
+
 def write_resumable(df: DataFrame, output_dir: str, url_col: str = "url",
                     n_buckets: int = N_BUCKETS_DEFAULT) -> dict:
-    """resume_filter + write_partitioned in one call: processes only
-    uncommitted buckets and commits their manifests."""
-    remaining = resume_filter(df, output_dir, url_col, n_buckets)
-    return write_partitioned(remaining, output_dir, url_col, n_buckets)
+    """Write the rows of the still-pending buckets and commit a manifest
+    that covers all of those buckets, so the ones left empty count as
+    committed too. Over a complete table it returns `nothing_pending`
+    without touching `df`."""
+    pending = pending_buckets(output_dir, n_buckets)
+    if not pending:
+        return nothing_pending(n_buckets)
+    return _write(_keep_pending(df, url_col, n_buckets, pending), output_dir,
+                  url_col, n_buckets, None, pending)
 
 
 def iceberg_ddl(table_ident: str, df: DataFrame, url_col: str = "url",
@@ -339,16 +378,8 @@ def snapshots(output_dir: str) -> list[dict]:
     """Committed manifests ordered by commit time (the snapshot log).
     Each manifest is one atomic commit - the parquet+manifest analogue of
     Iceberg's snapshot list (VERSION HISTORY of the table)."""
-    fs = fs_for(output_dir)
-    mdir = fs.join(output_dir, "_manifests")
-    if not fs.isdir(mdir):
-        return []
-    out = []
-    for fn in sorted(fs.listdir(mdir)):
-        if fn.endswith(".json"):
-            out.append(fs.read_json(fs.join(mdir, fn)))
-    out.sort(key=lambda m: (m["committed_at"], m["run_id"]))
-    return out
+    return sorted(_manifests(output_dir),
+                  key=lambda m: (m["committed_at"], m["run_id"]))
 
 
 def read_snapshot(spark: SparkSession, output_dir: str,

@@ -166,10 +166,13 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
       protocol: outputs land under output_dir/batch=<id>/{triples,
       entities,errors}, so a retry's write_resumable skips the buckets
       the crashed attempt already committed and completes the rest - no
-      duplicate partitions, no lost ones. (Batch-scoped directories are
-      what makes lineage resume correct here: bucket keys REPEAT across
-      micro-batches, so committing them in one shared table would make
-      later batches invisible.)
+      duplicate partitions, no lost ones. A table the crashed attempt
+      completed is skipped from its manifests alone: the retry still
+      rebuilds the batch's graph (connected components included), but
+      an already-complete triples write runs no job. (Batch-scoped
+      directories are what makes lineage resume correct here: bucket
+      keys REPEAT across micro-batches, so committing them in one shared
+      table would make later batches invisible.)
 
     'mid' fires between the triples commit and the entities commit.
 

@@ -34,3 +34,19 @@ def spark():
         .getOrCreate()
     )
     yield session
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """run(group, fn, *args) -> (fn's result, ids of the Spark jobs it
+    started under that job group)."""
+    sc = spark.sparkContext
+
+    def run(group, fn, *args):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, sc.statusTracker().getJobIdsForGroup(group)
+    return run

@@ -1253,6 +1253,54 @@ def test_lineage_write_and_resume(spark, tmp_path, docs):
     assert committed_partitions(out) > done
 
 
+def test_lineage_covered_buckets_complete_the_table(spark, tmp_path,
+                                                    jobs_in_group):
+    """write_resumable commits every bucket it was responsible for, the
+    ones its input left empty included: the re-run over the complete
+    table commits nothing and runs no Spark job."""
+    from csvweb_spark.plans.lineage import pending_buckets, write_resumable
+    out = str(tmp_path / "covered")
+    df = spark.createDataFrame([(f"http://p/{i}", "t") for i in range(3)],
+                               "url string, text string")
+    m1 = write_resumable(df, out, n_buckets=8)
+    assert m1["total_rows"] == 3
+    assert len(m1["partitions"]) < 8  # some buckets got no rows
+    assert m1["covered"] == list(range(8))
+    assert pending_buckets(out, 8) == set()
+    m2, jobs = jobs_in_group("covered-rerun", write_resumable, df, out,
+                             "url", 8)
+    assert jobs == []
+    assert m2["partitions"] == [] and m2["total_rows"] == 0
+    assert len(os.listdir(os.path.join(out, "_manifests"))) == 1
+    # the bucket count stays part of the table's identity
+    with pytest.raises(ValueError, match="n_buckets"):
+        write_resumable(df, out, n_buckets=4)
+    with pytest.raises(ValueError, match="n_buckets"):
+        pending_buckets(out, 4)
+
+
+def test_lineage_bare_write_covers_only_written(spark, tmp_path, docs):
+    """A bare write_partitioned of a filtered input commits only the
+    partitions it wrote; the filtered-out buckets stay pending."""
+    from csvweb_spark.plans.lineage import (
+        pending_buckets, read_snapshot, with_part_key, write_partitioned,
+        write_resumable)
+    out = str(tmp_path / "bare")
+    df = docs.limit(40).select(
+        F.concat(F.lit("http://p/"), F.col("doc_id")).alias("url"), "text")
+    keyed = with_part_key(df, n_buckets=8)
+    m1 = write_partitioned(keyed.filter(F.col("part_key") < 4), out,
+                           n_buckets=8)
+    written = {p["part_key"] for p in m1["partitions"]}
+    assert m1["covered"] == []
+    assert pending_buckets(out, 8) == set(range(8)) - written
+    assert pending_buckets(out, 8) >= {4, 5, 6, 7}
+    m2 = write_resumable(df, out, n_buckets=8)
+    assert m1["total_rows"] + m2["total_rows"] == 40
+    assert read_snapshot(spark, out).count() == 40
+    assert pending_buckets(out, 8) == set()
+
+
 def test_lineage_protocol_over_hadoop_fs(spark, tmp_path, docs):
     """The SAME commit protocol through the Hadoop FileSystem adapter: a
     file:// scheme routes every metadata op (manifest write/list/read,

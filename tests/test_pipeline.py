@@ -157,14 +157,54 @@ def test_build_knowledge_graph_end_to_end(spark, pages, aliases, tmp_path):
     assert subj0 == subj1  # canonicalized to the same entity node
 
 
-def test_pipeline_resume_skips_committed(spark, pages, aliases, tmp_path):
+def test_pipeline_resume_skips_committed(spark, pages, aliases, tmp_path,
+                                         jobs_in_group):
     from csvweb_spark.pipeline import build_knowledge_graph
 
     out = str(tmp_path / "kg2")
     r1 = build_knowledge_graph(spark, pages, _table(), aliases, out)
     n1 = spark.read.parquet(os.path.join(out, "triples", "data")).count()
     # a re-run with the same input commits nothing new (all buckets done)
-    r2 = build_knowledge_graph(spark, pages, _table(), aliases, out)
+    # and, every table being complete, is a manifest read: no Spark job
+    r2, jobs = jobs_in_group("resume", build_knowledge_graph, spark, pages,
+                             _table(), aliases, out)
+    assert jobs == []
     assert r2["triples"]["total_rows"] == 0
     n2 = spark.read.parquet(os.path.join(out, "triples", "data")).count()
     assert n1 == n2
+
+
+def test_pipeline_resume_after_crash_between_table_commits(
+        spark, pages, aliases, tmp_path):
+    """A crash after the triples commit and before the entities/errors
+    commits: the resume completes the missing tables from the lazy
+    frames and leaves the committed triples alone."""
+    import shutil
+
+    from csvweb_spark.pipeline import build_knowledge_graph
+    from csvweb_spark.plans.lineage import read_snapshot
+
+    out = str(tmp_path / "kg3")
+    build_knowledge_graph(spark, pages, _table(), aliases, out)
+
+    def rows(table):
+        df = read_snapshot(spark, os.path.join(out, table))
+        return sorted(tuple(r) for r in df.drop("part_key").collect())
+
+    def files(table):
+        return sorted(os.path.join(d, f) for d, _, fs in
+                      os.walk(os.path.join(out, table, "data"))
+                      for f in fs if f.endswith(".parquet"))
+
+    triples, entities, triple_files = rows("triples"), rows("entities"), \
+        files("triples")
+    assert triples and entities
+    for table in ("entities", "errors"):
+        shutil.rmtree(os.path.join(out, table, "_manifests"))
+
+    r2 = build_knowledge_graph(spark, pages, _table(), aliases, out)
+    assert r2["triples"]["total_rows"] == 0
+    assert r2["entities"]["total_rows"] == len(entities)
+    assert files("triples") == triple_files
+    assert rows("triples") == triples
+    assert rows("entities") == entities
